@@ -25,8 +25,8 @@ from i3cols_spark.sources import ingest
 
 def _is_npy_dataset(dirpath: str) -> bool:
     """True when ``dirpath`` is in the reference's NATIVE layout (any
-    ``<key>/data.npy`` subdir) — ``load`` then reads it through the
-    i3cols_npy DataSource, so existing on-disk i3cols datasets work
+    ``<key>/data.npy`` subdir) — ``load`` then reads it through
+    ``read_npy_columns``, so existing on-disk i3cols datasets work
     unconverted."""
     import os
 

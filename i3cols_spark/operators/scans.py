@@ -130,7 +130,7 @@ def _npy_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events table once per dataset CONTENT in the
     reference's native npy column-dir layout (under the system temp
     dir), so the scan below exercises the real migration path: npy
-    dataset → Python DataSource → DataFrame.
+    dataset → read_npy_columns → DataFrame.
 
     The ``_SUCCESS`` marker records a size+mtime fingerprint of the
     source parquet: an in-place fixture regeneration (it happened
@@ -176,10 +176,11 @@ def _npy_events_fixture(spark: SparkSession, sf_dir: str) -> str:
 )
 def q_source_npy_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S5 ingest parity end-to-end: aggregate events read through
-    the ``i3cols_npy`` Python DataSource (sources/npy_cols.py — the
-    reference's ``<key>/data.npy`` column-dir format, i3cols/cols.py::
-    load), not through parquet.  Row-range splits mmap their slice of
-    every key and yield Arrow batches; the oracle runs the same
+    ``read_npy_columns`` (sources/npy_cols.py — the reference's
+    ``<key>/data.npy`` column-dir format, i3cols/cols.py::load), not
+    through parquet.  The read is planned on the driver and runs as one
+    ``mapInArrow`` whose tasks mmap a row-range split of every key and
+    yield Arrow batches; the oracle runs the same
     aggregate over the parquet twin, proving value-level fidelity of
     the format bridge."""
     from i3cols_spark.sources.npy_cols import read_npy_columns

@@ -4,10 +4,18 @@ each holding ``data.npy`` (NumPy array, possibly structured) and — for
 ragged columns — ``index.npy`` of ``(start, stop)`` pairs, one per row
 (i3cols/cols.py::save_item / ::load, i3cols/dtypes.py::START_STOP_T).
 
-Implemented as a PySpark **Python DataSource** (Spark 4), so existing
-i3cols datasets are first-class tables::
+Batch reads are planned in the driver's own process: keys, schema,
+row count and row-range splits come from the ``.npy`` headers, and a
+``spark.range(n_splits).mapInArrow(...)`` reads one split per task, so
+existing i3cols datasets are first-class tables::
 
     df = read_npy_columns(spark, "/data/run123", keys=["hits", "energy"])
+
+(A Python DataSource would plan each read in three extra Python
+processes — lookup, create, plan — started one after another before
+the first task.)  ``stream_npy_columns`` tails a growing dataset
+through the ``i3cols_npy`` Python DataSource, because streaming
+offsets need the DataSource API.
 
 Spark-first design notes:
 
@@ -16,20 +24,19 @@ Spark-first design notes:
   touched, the distributed generalization of the reference's
   single-process mmap laziness.  Ragged columns slice their
   ``(start, stop)`` window out of ``index.npy`` and gather just those
-  value rows.
-* **Arrow batches, not Python rows.**  ``read`` yields
+  value rows; a window outside ``0 <= start <= stop <= len(data)``
+  raises, naming the key and row.
+* **Arrow batches, not Python rows.**  Tasks yield
   ``pyarrow.RecordBatch`` — NumPy slice → Arrow is zero/near-zero
   copy, and rows never materialize as Python objects.
-* **Filter pushdown.**  Predicates on the positional ``event_id``
-  column (the surrogate key the engine materializes at ingest,
-  SURVEY §1.2) narrow the row range BEFORE partition planning via
-  ``pushFilters`` — the reference's category-index slicing, expressed
-  as a datasource pushdown.
+* **Positional ``event_id``.**  The reader synthesizes the row index
+  as ``event_id`` (the surrogate key the engine materializes at
+  ingest, SURVEY §1.2).  Predicates on it are evaluated by Spark after
+  the read; they do not narrow the splits.
 * **Projection.**  ``keys=`` limits the schema to those column dirs
   (the ``load(keys=...)`` contract); unrequested keys are never
-  opened.  (Spark cannot yet prune columns *through* a Python
-  DataSource on its own, so the knob is explicit, exactly like the
-  reference's.)
+  opened.  (Spark cannot prune columns through ``mapInArrow`` on its
+  own, so the knob is explicit, exactly like the reference's.)
 
 ``write_npy_columns`` is the inverse — a **driver-side migration/
 export utility** (collects through Arrow), not a scale sink; the
@@ -52,14 +59,8 @@ import pyarrow as pa
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
     InputPartition,
-    LessThan,
-    LessThanOrEqual,
 )
 from pyspark.sql.types import (
     ArrayType,
@@ -183,60 +184,26 @@ def _num_rows(key: _Key) -> int:
     return np.load(target, mmap_mode="r").shape[0]
 
 
-class NpyColsReader(DataSourceReader):
-    def __init__(self, path: str, keys: list[_Key], npartitions: int, batch_rows: int):
-        self.path = path
-        self.keys = keys
-        self.npartitions = npartitions
-        self.batch_rows = batch_rows
-        rows = {k.name: _num_rows(k) for k in keys}
-        if len(set(rows.values())) > 1:
-            raise ValueError(f"misaligned columns in {path}: {rows}")
-        self.nrows = next(iter(rows.values())) if rows else 0
-        self.lo, self.hi = 0, self.nrows  # narrowed by pushFilters
-
-    def pushFilters(self, filters):  # noqa: N802 (Spark API name)
-        """Consume range predicates on the positional ``event_id``:
-        they become mmap slice bounds (the category-slice semantic).
-        Returns the filters we can't evaluate (Spark re-applies them)."""
-        unsupported = []
-        for f in filters:
-            attr = tuple(getattr(f, "attribute", ()) or ())
-            v = getattr(f, "value", None)
-            if attr != (EVENT_ID,) or not isinstance(v, int):
-                unsupported.append(f)
-            elif isinstance(f, EqualTo):
-                self.lo, self.hi = max(self.lo, v), min(self.hi, v + 1)
-            elif isinstance(f, GreaterThan):
-                self.lo = max(self.lo, v + 1)
-            elif isinstance(f, GreaterThanOrEqual):
-                self.lo = max(self.lo, v)
-            elif isinstance(f, LessThan):
-                self.hi = min(self.hi, v)
-            elif isinstance(f, LessThanOrEqual):
-                self.hi = min(self.hi, v + 1)
-            else:
-                unsupported.append(f)
-        return unsupported
-
-    def partitions(self):
-        # A split smaller than one Arrow batch still costs a Python
-        # worker task but yields a single partial batch — cap the split
-        # count so every split carries ≥ batch_rows (tiny datasets get
-        # 1-2 tasks; at scale the npartitions knob governs).
-        span = max(self.lo, self.hi) - self.lo
-        n = min(self.npartitions, max(1, -(-span // self.batch_rows)))
-        return _range_partitions(self.lo, max(self.lo, self.hi), n)
-
-    def read(self, partition: InputPartition):
-        start, stop = partition.value
-        return _read_range(self.keys, start, stop, self.batch_rows)
+def _schema(keys: list[_Key]) -> StructType:
+    fields = [StructField(EVENT_ID, LongType(), False)]
+    for k in keys:
+        t = ArrayType(k.spark_type) if k.index_path else k.spark_type
+        fields.append(StructField(k.name, t, True))
+    return StructType(fields)
 
 
 def _ragged_slice(data, index, a, b, key: _Key) -> pa.ListArray:
     idx = index[a:b]
     starts = idx["start"].astype(np.int64)
     stops = idx["stop"].astype(np.int64)
+    bad = (starts < 0) | (starts > stops) | (stops > len(data))
+    if bad.any():
+        i = int(np.argmax(bad))
+        raise ValueError(
+            f"corrupt index.npy for key {key.name!r} at row {a + i}: "
+            f"(start, stop) = ({starts[i]}, {stops[i]}) is outside "
+            f"0 <= start <= stop <= {len(data)} (rows in data.npy)"
+        )
     lens = stops - starts
     offsets = np.zeros(len(idx) + 1, dtype=np.int64)
     np.cumsum(lens, out=offsets[1:])
@@ -253,8 +220,8 @@ def _ragged_slice(data, index, a, b, key: _Key) -> pa.ListArray:
 
 def _read_range(keys: list[_Key], start: int, stop: int, batch_rows: int):
     """Yield Arrow batches for rows [start, stop) of every key — the
-    shared task body of the batch and stream readers.  mmaps open per
-    task; only the slice's pages are touched."""
+    shared task body of the batch read and the stream reader.  mmaps
+    open per task; only the slice's pages are touched."""
     cols = {k.name: np.load(k.data_path, mmap_mode="r") for k in keys}
     idxs = {
         k.name: np.load(k.index_path, mmap_mode="r") for k in keys if k.index_path
@@ -317,9 +284,10 @@ class NpyColsStreamReader(DataSourceStreamReader):
 
 
 class NpyColsDataSource(DataSource):
-    """``spark.read.format("i3cols_npy").load(path)`` — options:
+    """``spark.readStream.format("i3cols_npy").load(path)`` — options:
     ``keys`` (comma-separated projection), ``partitions`` (split
-    count; default 16), ``batchRows`` (Arrow batch size)."""
+    count; default 16), ``batchRows`` (Arrow batch size).  Batch reads
+    go through ``read_npy_columns`` instead."""
 
     @classmethod
     def name(cls) -> str:
@@ -331,19 +299,7 @@ class NpyColsDataSource(DataSource):
         return _scan_keys(self.options["path"], keys)
 
     def schema(self) -> StructType:
-        fields = [StructField(EVENT_ID, LongType(), False)]
-        for k in self._keys():
-            t = ArrayType(k.spark_type) if k.index_path else k.spark_type
-            fields.append(StructField(k.name, t, True))
-        return StructType(fields)
-
-    def reader(self, schema: StructType) -> NpyColsReader:
-        return NpyColsReader(
-            self.options["path"],
-            self._keys(),
-            int(self.options.get("partitions", "16")),
-            int(self.options.get("batchrows", "65536")),
-        )
+        return _schema(self._keys())
 
     def streamReader(self, schema: StructType) -> NpyColsStreamReader:  # noqa: N802
         return NpyColsStreamReader(
@@ -353,36 +309,54 @@ class NpyColsDataSource(DataSource):
         )
 
 
-def register(spark) -> None:
-    """Register the format and enable Python-datasource filter pushdown
-    (a session conf, off by default; without it Spark refuses any
-    reader that implements ``pushFilters``)."""
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # older/locked-down session: reader still works, unpruned
-    spark.dataSource.register(NpyColsDataSource)
+def read_npy_columns(
+    spark,
+    path: str,
+    keys: list[str] | None = None,
+    partitions: int = 16,
+    batch_rows: int = 65536,
+):
+    """Read an npy column-dir dataset as a DataFrame of ``event_id``
+    plus one column per key, in at most ``partitions`` row-range
+    splits of ``batch_rows``-row Arrow batches."""
+    ks = _scan_keys(path, keys)
+    rows = {k.name: _num_rows(k) for k in ks}
+    if len(set(rows.values())) > 1:
+        raise ValueError(f"misaligned columns in {path}: {rows}")
+    nrows = next(iter(rows.values()), 0)
+    # A split smaller than one Arrow batch still costs a Python worker
+    # task but yields a single partial batch — cap the split count so
+    # every split carries ≥ batch_rows (tiny datasets get 1-2 tasks; at
+    # scale the partitions knob governs).
+    n = min(partitions, max(1, -(-nrows // batch_rows)))
+    splits = [p.value for p in _range_partitions(0, nrows, n)]
+
+    def read(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                start, stop = splits[i]
+                yield from _read_range(ks, start, stop, batch_rows)
+
+    return spark.range(0, len(splits), 1, len(splits)).mapInArrow(read, _schema(ks))
 
 
-def read_npy_columns(spark, path: str, keys: list[str] | None = None, **options):
-    register(spark)
-    reader = spark.read.format(FORMAT_NAME)
-    if keys is not None:
-        reader = reader.option("keys", ",".join(keys))
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load(path)
-
-
-def stream_npy_columns(spark, path: str, keys: list[str] | None = None, **options):
+def stream_npy_columns(
+    spark,
+    path: str,
+    keys: list[str] | None = None,
+    partitions: int = 16,
+    batch_rows: int = 65536,
+):
     """``readStream`` over a growing npy dataset (see
     NpyColsStreamReader for the append contract)."""
-    register(spark)
-    reader = spark.readStream.format(FORMAT_NAME)
+    spark.dataSource.register(NpyColsDataSource)
+    reader = (
+        spark.readStream.format(FORMAT_NAME)
+        .option("partitions", partitions)
+        .option("batchRows", batch_rows)
+    )
     if keys is not None:
         reader = reader.option("keys", ",".join(keys))
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
     return reader.load(path)
 
 

@@ -55,7 +55,7 @@ def test_reference_workflow_roundtrip(spark, tmp_path):
 
 def test_load_autodetects_native_npy_layout(spark, tmp_path):
     """compat.load on an UNCONVERTED i3cols dataset (npy column dirs)
-    reads through the i3cols_npy DataSource transparently."""
+    reads through read_npy_columns transparently."""
     import os
 
     import numpy as np

@@ -1,6 +1,7 @@
-"""The i3cols_npy Python DataSource: reading the reference's native
+"""The npy column-dir reader: reading the reference's native
 ``<key>/data.npy`` (+ ``index.npy``) column-dir layout as a DataFrame,
-filter pushdown into mmap slice bounds, and the export round trip."""
+rejecting corrupt ragged indexes, the ``readStream`` tail, and the
+export round trip."""
 
 from __future__ import annotations
 
@@ -10,12 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from i3cols_spark.sources.npy_cols import (
-    NpyColsReader,
-    _scan_keys,
-    read_npy_columns,
-    write_npy_columns,
-)
+from i3cols_spark.sources.npy_cols import read_npy_columns, write_npy_columns
 
 
 @pytest.fixture(scope="module")
@@ -86,21 +82,40 @@ def test_keys_projection_opens_only_requested(spark, npy_dataset):
 
 
 def test_filter_pushdown_narrows_partitions(spark, npy_dataset):
+    """Predicates on the positional event_id are evaluated by Spark
+    after the read; the rows they select must be exact."""
     d = npy_dataset[0]
     df = read_npy_columns(spark, d, partitions=4)
     assert df.filter("event_id >= 90").count() == 10
     assert df.filter((F.col("event_id") >= 20) & (F.col("event_id") < 25)).count() == 5
-    # reader-level: the range predicates must shrink the planned splits
-    rdr = NpyColsReader(d, _scan_keys(d, None), npartitions=4, batch_rows=1 << 16)
-    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
 
-    left = rdr.pushFilters(
-        [GreaterThanOrEqual(("event_id",), 90), LessThan(("event_id",), 95)]
-    )
-    assert list(left) == []
-    parts = rdr.partitions()
-    covered = sorted(p.value for p in parts)
-    assert covered[0][0] == 90 and covered[-1][1] == 95
+
+def test_misspelt_read_option_is_rejected(spark, npy_dataset):
+    with pytest.raises(TypeError, match="partition"):
+        read_npy_columns(spark, npy_dataset[0], partition=4)
+
+
+@pytest.mark.parametrize(
+    "start, stop",
+    [
+        ([0, 5, 3], [4, 2, 6]),  # start > stop mid-dataset
+        ([0, 4], [4, 3]),  # start > stop at a contiguous boundary
+        ([0, 4], [4, 8]),  # stop past the end of data.npy
+    ],
+    ids=["start_after_stop", "backwards_contiguous", "stop_past_data"],
+)
+def test_corrupt_ragged_index_rejected(spark, tmp_path, start, stop):
+    """A (start, stop) window outside 0 <= start <= stop <= len(data)
+    raises a ValueError naming the key and the row, instead of
+    returning shifted values or failing inside Arrow."""
+    d = str(tmp_path / "ds")
+    os.makedirs(os.path.join(d, "p"))
+    idx = np.empty(len(start), dtype=[("start", "<u8"), ("stop", "<u8")])
+    idx["start"], idx["stop"] = start, stop
+    np.save(os.path.join(d, "p", "index.npy"), idx)
+    np.save(os.path.join(d, "p", "data.npy"), np.arange(6, dtype=np.int32))
+    with pytest.raises(Exception, match=r"corrupt index\.npy for key 'p' at row 1"):
+        read_npy_columns(spark, d).collect()
 
 
 def test_misaligned_columns_rejected(spark, tmp_path):

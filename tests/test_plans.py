@@ -1451,3 +1451,14 @@ def test_simhash_verified_pins_verify_stage_width(spark, sf_dir):
     assert plan.count("REPARTITION_BY_NUM") >= 4, plan.count(
         "REPARTITION_BY_NUM"
     )
+
+
+def test_npy_batch_read_is_map_in_arrow_not_python_scan(spark, sf_dir):
+    """A batch npy read is planned in the driver's process and runs as
+    one MapInArrow over row-range splits: a Python DataSource scan
+    would start three Python planner processes before its first task."""
+    df = QUERIES["q_source_npy_scan"](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "BatchScan" not in plan, plan
