@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from i3cols_spark.session import configure
 from i3cols_spark.sources.tables import normalize_events_ts, table
@@ -245,7 +246,9 @@ def stream_anomaly_mad_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_rollup_maintenance(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
+def run_rollup_maintenance(
+    spark: SparkSession, sf_dir: str, out_dir: str
+) -> StreamingQuery:
     """Continuously-maintained 1-hour rollup: the streaming tumbling
     aggregate upserted into a window-partitioned Parquet table via
     ``foreachBatch`` + dynamic partition overwrite.
@@ -258,14 +261,27 @@ def run_rollup_maintenance(spark: SparkSession, sf_dir: str, out_dir: str) -> No
     rollup table always equals the batch q_stream_tumbling over all
     data seen so far (asserted in tests), and readers hit a plain
     partition-pruned Parquet table with no streaming machinery.
+
+    Each batch is written without an emptiness probe: a ``foreachBatch``
+    frame is not cached, so every action on it (``isEmpty`` included)
+    re-runs the stateful plan — state-store load, commit and all.  An
+    empty batch (the trailing no-data batch that advances the
+    watermark) writes nothing and, under dynamic overwrite, replaces
+    no partition.  The batch is repartitioned by ``window_start_us``
+    before the write, so each window is written by one task and every
+    ``window_start_us=<µs>`` directory holds exactly one Parquet file.
+    The repartition belongs to the batch write, not to the streaming
+    plan, so checkpoints keep their state-partition count.
+
+    Returns the finished query, whose ``recentProgress`` carries the
+    per-batch row counts and state size.
     """
     agg = stream_tumbling_counts(spark, sf_dir)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         (
-            batch_df.write.mode("overwrite")
+            batch_df.repartition("window_start_us")
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("window_start_us")
             .parquet(out_dir)
@@ -279,6 +295,7 @@ def run_rollup_maintenance(spark: SparkSession, sf_dir: str, out_dir: str) -> No
         .start()
     )
     q.awaitTermination()
+    return q
 
 
 def run_to_memory(df: DataFrame, name: str) -> None:

@@ -4,6 +4,9 @@ parquet must equal its operators.stream_batch twin."""
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -80,7 +83,9 @@ def test_stateful_user_peaks_matches_batch(spark, sf_dir):
 def test_rollup_maintenance_equals_batch(spark, sf_dir, tmp_path):
     """foreachBatch upsert rollup: after availableNow drains the
     source, the window-partitioned parquet equals the batch tumbling
-    aggregate, and partition layout is by window start."""
+    aggregate, and partition layout is by window start with one file
+    per window.  The equality also shows that the trailing no-data
+    batch's empty write replaced no partition."""
     out = str(tmp_path / "rollup")
     jobs.run_rollup_maintenance(spark, sf_dir, out)
     rolled = spark.read.parquet(out).select(
@@ -88,12 +93,33 @@ def test_rollup_maintenance_equals_batch(spark, sf_dir, tmp_path):
     )
     batch = QUERIES["q_stream_tumbling"](spark, sf_dir)
     assert _rows(rolled) == _rows(batch)
+    windows = glob.glob(os.path.join(out, "window_start_us=*"))
+    assert len(windows) == batch.select("window_start_us").distinct().count()
+    for w in windows:
+        assert len(glob.glob(os.path.join(w, "*.parquet"))) == 1, w
     # partition pruning works: one window's read touches one partition dir
     one = rolled.limit(1).collect()[0]
     pruned = spark.read.parquet(out).filter(
         F.col("window_start_us") == one.window_start_us
     )
     assert pruned.count() >= 1
+
+
+def test_rollup_maintenance_runs_each_batch_once(spark, sf_dir, tmp_path):
+    """Each micro-batch's stateful plan runs once: the data batch's
+    state store counts each (window, event_type) group once, and the
+    stream's job group holds one job per batch.  An emptiness probe on
+    the uncached foreachBatch frame would run the plan a second time,
+    doubling numRowsTotal and adding a job."""
+    out = str(tmp_path / "rollup")
+    q = jobs.run_rollup_maintenance(spark, sf_dir, out)
+    n_groups = spark.read.parquet(out).count()
+    progress = q.recentProgress
+    data = [p for p in progress if p.numInputRows > 0]
+    assert len(data) == 1
+    assert data[0].stateOperators[0].numRowsTotal == n_groups
+    job_ids = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(job_ids) == len(progress)
 
 
 def test_stream_contamination_matches_batch_flags(spark, sf_dir):
